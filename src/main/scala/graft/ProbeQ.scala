@@ -1,13 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+/** Dev tool: split named queries' warm time into DataFrame construction
+  * and action — `runMain graft.ProbeQ q95 q132` on BenchOne's session
+  * (`$SPARK_GRAFT_SF_DIR`, `$SPARK_GRAFT_CPUS`). */
 object ProbeQ {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val sfDir = "/root/testdata/sf0.1"
+  def main(args: Array[String]): Unit = BenchOne.withSession { (spark, sfDir) =>
     args.foreach { qname =>
       val fn = SparkEntry.queries(qname)
       // warm
@@ -21,6 +18,5 @@ object ProbeQ {
         System.err.println(f"[probe] $qname rep$rep construct ${(t1-t0)/1e9}%.2f s action ${(t2-t1)/1e9}%.2f s")
       }
     }
-    spark.stop()
   }
 }

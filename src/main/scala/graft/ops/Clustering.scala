@@ -222,34 +222,17 @@ object Clustering {
         round(col("sim"), 6).as("sim"))
       .orderBy(col("vec_id"))
 
-  /** Session-cached materialization of [[kmeansAssignments]] (the
-    * fuzzyLabelsCached / cosinePairs04Cached sibling): FIVE queries ride
-    * the identical (k=8, updates=2) Lloyd pipeline — q134 semdedup,
-    * q233/q234's contingency, q266 embedding outliers, q277 cluster
-    * labels — and each previously re-ran the 2-round fit (3 driver
-    * collects + 3 broadcast-assign passes). The rounds are deterministic
-    * (round(6) means, first-k init), so a hit is bit-identical and every
-    * downstream oracle is unaffected. q119's own bench entry keeps the
-    * uncached builder so the fit's true cost stays measured (the
-    * fuzzyPairsCached q32 precedent). */
-  private val kmeansCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
+  /** [[kmeansAssignments]] at the query defaults as a [[Shared]] entry:
+    * FIVE queries ride the identical (k=8, updates=2) Lloyd pipeline —
+    * q134 semdedup, q233/q234's contingency, q266 embedding outliers, q277
+    * cluster labels; q119 keeps the uncached builder. */
   private[graft] def kmeansAssignmentsCached(t: Tables, k: Int = 8,
       updates: Int = 2): DataFrame =
-    kmeansCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#kmeans#$k#$updates",
-      kmeansAssignments(t, k, updates).localCheckpoint())
+    Shared.frame(t, "kmeans_assign", k, updates)(kmeansAssignments(t, k, updates))
 
-  /** Bench warm-structure hook (VERDICT r12 item 1): forces the shared
-    * Lloyd assignment at the query defaults so no timed consumer pays
-    * another's fit. */
-  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = {
-    def timed(name: String)(f: => Unit): (String, Double) = {
-      val t0 = System.nanoTime(); f; name -> ((System.nanoTime() - t0) / 1e9)
-    }
-    Seq(timed("kmeans_assign") { kmeansAssignmentsCached(t); () })
-  }
+  /** Prewarm hook ([[Shared.prewarm]]). */
+  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] =
+    Seq(Shared.timed("kmeans_assign")(kmeansAssignmentsCached(t)))
 
   /** The q119 Lloyd pipeline up to (and including) the final assignment,
     * with the vectors still attached: (vec_id, e, cid, sim). Shared by

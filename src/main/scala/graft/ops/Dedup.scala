@@ -452,16 +452,10 @@ object Dedup {
     * q195/q257: (doc_id, cv0..cv3, chunk, cv) — one 64-column signature
     * aggregate, then a single projection + explode for the 4 band rows
     * per doc (q128: a 4-way union of selects recomputes the pipeline per
-    * branch). Session-cached (the fuzzyLabelsCached contract): FIVE
-    * consumers, one deterministic build, bit-identical hits; the table is
-    * 4 small rows per doc, so the checkpoint is cheap at any SF. */
-  private val bandsCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
+    * branch). A [[Shared]] entry with FIVE consumers; the table is 4 small
+    * rows per doc, so the checkpoint is cheap at any SF. */
   private def simhashBands(t: Tables): DataFrame =
-    bandsCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#simhash-bands",
-      simhashBandsBuild(t).localCheckpoint())
+    Shared.frame(t, "simhash_bands")(simhashBandsBuild(t))
 
   private def simhashBandsBuild(t: Tables): DataFrame = {
     val toks = t.fanout(t.documents)
@@ -1402,51 +1396,27 @@ object Dedup {
       .select(col("id"), coalesce(col("root"), col("id")).as("label"))
   }
 
-  /** Session-cached component labels over the DEFAULT q32 fuzzy pair
-    * graph — the warm-structure contract (weightsCache / indexCache /
-    * mergeCache sibling): NINE queries consume the identical
-    * qFuzzyPairs → starContract pipeline (q115/q141/q147/q226/q230/q249/
-    * q252/q254/q257/q258); whichever runs first in a session pays the
-    * contraction, the rest read the localCheckpointed (id, label) table.
-    * The contraction is deterministic, so a hit is bit-identical and
-    * every downstream oracle stays hash-green; Bench's full warm pass
-    * pre-builds it. */
-  private val labelsCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
+  /** Component labels over the DEFAULT q32 fuzzy pair graph, a [[Shared]]
+    * entry: NINE queries consume the identical qFuzzyPairs → starContract
+    * pipeline (q115/q141/q147/q226/q230/q249/q252/q254/q257/q258), and
+    * whichever runs first in a session pays the contraction. */
   private[graft] def fuzzyLabelsCached(t: Tables): DataFrame =
-    labelsCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#fuzzy-labels",
-      componentLabels(fuzzyPairsCached(t),
-        t.documents.select(col("doc_id").as("id"))).localCheckpoint())
+    Shared.frame(t, "fuzzy_labels")(componentLabels(fuzzyPairsCached(t),
+      t.documents.select(col("doc_id").as("id"))))
 
-  /** Session-cached DEFAULT q32 pair list (id_a, id_b) — the generator
-    * itself, shared by the walk/audit/closure consumers (q36/q37/q147/
-    * q195/q227 + the labels cache above). q32's own bench entry keeps the
-    * uncached builder so the generator's true cost stays measured. */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
+  /** The DEFAULT q32 pair list (id_a, id_b), a [[Shared]] entry — the
+    * generator itself, shared by the walk/audit/closure consumers (q36/
+    * q37/q147/q195/q227 + the labels above); q32 keeps the uncached
+    * builder. */
   private[graft] def fuzzyPairsCached(t: Tables): DataFrame =
-    pairsCache.getOrElseUpdate(
-      s"${Layout.sessionTag(t.spark)}#${t.sfDir}#fuzzy-pairs",
-      qFuzzyPairs(t).select(col("id_a"), col("id_b")).localCheckpoint())
+    Shared.frame(t, "fuzzy_pairs")(qFuzzyPairs(t).select(col("id_a"), col("id_b")))
 
-  /** Bench warm-structure hook (VERDICT r12 item 1): forces the three
-    * session-cached dedup structures in a fixed order. All three are
-    * localCheckpoint-backed (they survive Bench's clearCache()); forcing
-    * here makes a fresh session order-independent and puts the build cost
-    * on the bench stderr record instead of on whichever timed consumer
-    * (q36/q37/q147/q195/q227/…) happens to run first. */
-  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = {
-    def timed(name: String)(f: => Unit): (String, Double) = {
-      val t0 = System.nanoTime(); f; name -> ((System.nanoTime() - t0) / 1e9)
-    }
-    Seq(
-      timed("simhash_bands")(simhashBands(t).count()),
-      timed("fuzzy_pairs")(fuzzyPairsCached(t).count()),
-      timed("fuzzy_labels")(fuzzyLabelsCached(t).count()))
-  }
+  /** Prewarm hook ([[Shared.prewarm]]): this module's shared structures,
+    * in a fixed order. */
+  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = Seq(
+    Shared.timed("simhash_bands")(simhashBands(t).count()),
+    Shared.timed("fuzzy_pairs")(fuzzyPairsCached(t).count()),
+    Shared.timed("fuzzy_labels")(fuzzyLabelsCached(t).count()))
 
   /** Min-id-per-component dedup: contract the near-dup pair graph into
     * connected components (distributed star contraction, O(log n) rounds —
@@ -2920,8 +2890,8 @@ object Dedup {
     * Integer overflow: d_s² needs d_s ≤ ~3e9 — at 100 TB switch q_num to
     * DECIMAL(38,0); the modularity double is unaffected.
     *
-    * Graph inputs are the session-cached fuzzy pair list (warm-structure
-    * contract), so composed audits never rebuild the blocked join. */
+    * Graph inputs are the shared fuzzy pair list ([[Shared]]), so
+    * composed audits never rebuild the blocked join. */
   def qGraphModularity(t: Tables): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(lit(0))
     val src = t.documents.select(col("doc_id"), col("source"))

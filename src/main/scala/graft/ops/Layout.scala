@@ -31,16 +31,13 @@ object Layout {
   private def dsum2(c: org.apache.spark.sql.Column) =
     sum(c.cast(DecimalType(18, 2))).cast("double")
 
-  /** One laid-out copy per (session, sfDir) per JVM. Tables, paths, and
-    * the cache key all carry the SAME session-scoped tag: two live
+  /** One laid-out copy per (session, sfDir), recorded as a [[Shared]]
+    * value. Tables and paths carry a session-scoped tag: two live
     * sessions on one sfDir get disjoint metastore tables and temp dirs
-    * (no overwrite race), and a restarted session gets a fresh tag (a
-    * rebuild is never skipped against a stopped session's catalog — the
-    * identity-hash-reuse hazard the old key had). Tags are a monotonic
-    * counter held in a WeakHashMap, so they restart per JVM and paths
-    * from a previous run get overwritten rather than accumulating. */
-  private val prepared = scala.collection.concurrent.TrieMap[String, Unit]()
-
+    * (no overwrite race), and a restarted session gets a fresh tag. Tags
+    * are a monotonic counter held in a WeakHashMap, so they restart per
+    * JVM and paths from a previous run get overwritten rather than
+    * accumulating. */
   private val sessionTags = new java.util.WeakHashMap[SparkSession, String]()
   private val sessionCtr = new java.util.concurrent.atomic.AtomicInteger()
   private[graft] def sessionTag(spark: SparkSession): String = sessionTags.synchronized {
@@ -68,8 +65,7 @@ object Layout {
     * like a real ingest job materializing a join-optimized layout. */
   private def ensureBucketed(t: Tables): (String, String) = {
     val (liName, ordName) = bucketNames(t)
-    val key = s"${sessionTag(t.spark)}#bkt#${t.sfDir}"
-    prepared.getOrElseUpdate(key, {
+    Shared.value(t, "bucketed_layout") {
       val root = layoutRoot(t)
       t.lineitem
         .select(col("l_orderkey"), col("l_returnflag"), col("l_extendedprice"))
@@ -83,7 +79,7 @@ object Layout {
         .option("path", root.resolve("orders_bkt").toString)
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
         .saveAsTable(ordName)
-    })
+    }
     (liName, ordName)
   }
 
@@ -130,10 +126,9 @@ object Layout {
   /** Write documents partitioned by lang (hive-style directories). */
   private def ensurePartitionedDocs(t: Tables): String = {
     val dir = layoutRoot(t).resolve("docs_by_lang").toString
-    val key = s"${sessionTag(t.spark)}#part#${t.sfDir}"
-    prepared.getOrElseUpdate(key, {
+    Shared.value(t, "lang_partitioned_docs") {
       t.documents.write.mode("overwrite").partitionBy("lang").parquet(dir)
-    })
+    }
     dir
   }
 

@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * (enc = ra·(maxR+2) + rb, strictly monotone in (ra, rb) lex order), the
   * DISTINCT encs are ranked by the bucketRank two-phase prefix (101
   * value-monotone buckets, offsets ride the driver — the q144/q205
-  * primitive) and joined back. Each round localCheckpoints (the q132
-  * lineage rule) and fetches one 1-row max (the exact-ladder rung
+  * primitive) and joined back. Each round is a [[Shared]] checkpoint (the
+  * q132 lineage rule) and fetches one 1-row max (the exact-ladder rung
   * precedent). rank_0's vocabulary window is census-bounded on this corpus
   * (the ~31-token template pool, q203); an unbounded-vocab corpus routes
   * the same step through a term-hash bucketRank.
@@ -45,32 +45,24 @@ import org.apache.spark.sql.functions._
   */
 object SuffixArray {
 
-  /** Session cache of the per-round rank chain (element r = the
-    * checkpointed table through rank_r): the suffix array IS a fitted
-    * index structure, so it follows the warm-structure contract
-    * (Similarity.indexCache / weightsCache precedent — deterministic
-    * build, bit-identical hits; q324 at rounds=6 and q325 at rounds=4
-    * share one chain instead of each paying the full doubling build). */
-  private val chainCache =
-    scala.collection.concurrent.TrieMap[String, Vector[DataFrame]]()
-
+  /** The positions ranked through rank_rounds, with each doc's length.
+    * Each round's table is a [[Shared]] entry (`suffix_rank` r, built
+    * from round r-1): the suffix array IS a fitted index structure, and
+    * q324 at rounds=6 and q325 at rounds=4 share one chain instead of each
+    * paying the full doubling build. */
   private[graft] def rankTables(t: Tables, rounds: Int): DataFrame = {
-    val key = s"${Layout.sessionTag(t.spark)}#${t.sfDir}#sa-chain"
-    var chain = chainCache.getOrElse(key, Vector(rankRound0(t)))
-    while (chain.size <= rounds) chain = chain :+ extendRank(chain.last, chain.size)
-    chainCache.put(key, chain)
-    val ranked = chain(rounds)
+    val ranked = rankRound(t, rounds)
     val lens = ranked.groupBy(col("doc_id")).agg(count(lit(1)).as("doc_len"))
     ranked.join(lens, Seq("doc_id"))
   }
 
-  /** Bench warm-structure hook (the r13 prewarm contract): force the
-    * shared rank chain to the q324 depth. */
-  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    rankTables(t, 6)
-    Seq("suffix_chain" -> ((System.nanoTime() - t0) / 1e9))
-  }
+  private def rankRound(t: Tables, r: Int): DataFrame =
+    Shared.frame(t, "suffix_rank", r)(
+      if (r == 0) rankRound0(t) else extendRank(rankRound(t, r - 1), r))
+
+  /** Prewarm hook ([[Shared.prewarm]]): the rank chain to the q324 depth. */
+  private[graft] def prewarmShared(t: Tables): Seq[(String, Double)] =
+    Seq(Shared.timed("suffix_chain")(rankTables(t, 6)))
 
   private def rankRound0(t: Tables): DataFrame = {
     val toks = text.tokenize(col("text"))
@@ -82,7 +74,6 @@ object SuffixArray {
       .withColumn("r", row_number().over(Window.orderBy(col("term"))).cast("long"))
     pos.join(vocab, Seq("term"))
       .select(col("doc_id"), col("off"), col("r").as("rank_0"))
-      .localCheckpoint()
   }
 
   /** One doubling round: extend a table carrying rank_0..rank_{i-1} with
@@ -102,7 +93,6 @@ object SuffixArray {
       maxR * (maxR + 2L) + maxR + 1L, Seq(col("enc")), s"rank_$i")
     enc.join(rankedEnc, Seq("enc"))
       .drop("enc", "rb")
-      .localCheckpoint()
   }
 
   /** Q324: the suffix-array BUILD gate — the per-level duplication

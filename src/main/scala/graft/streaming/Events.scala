@@ -69,11 +69,18 @@ object Events {
   private[graft] def withStreamShufflePartitions[A](
       spark: org.apache.spark.sql.SparkSession, src: String)(body: => A): A = {
     val f = new java.io.File(src)
+    // a directory counts its parquet files at any depth (a `key=value/`
+    // write nests them)
     val bytes =
-      if (f.isDirectory)
-        Option(f.listFiles).getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".parquet")).map(_.length).sum
-      else f.length
+      if (f.isDirectory) {
+        import java.nio.file.Files
+        import scala.jdk.CollectionConverters._
+        val walk = Files.walk(f.toPath)
+        try walk.iterator().asScala
+          .filter(p => p.getFileName.toString.endsWith(".parquet") && Files.isRegularFile(p))
+          .map(Files.size).sum
+        finally walk.close()
+      } else f.length
     val perPart = 16L << 20
     val n = math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
       (bytes + perPart - 1) / perPart))

@@ -40,6 +40,33 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("stream shuffle partitions size parquet bytes at any depth") {
+    import java.nio.file.{Files, Path}
+    // sparse files: the sizing reads only lengths
+    def sized(dir: Path, mb: Long): Unit = {
+      Files.createDirectories(dir)
+      val f = new java.io.RandomAccessFile(dir.resolve("part-0.parquet").toFile, "rw")
+      try f.setLength(mb << 20) finally f.close()
+    }
+    val root = Files.createTempDirectory("stream-sizing")
+    val key = "spark.sql.shuffle.partitions"
+    def chosen(p: Path): Int =
+      Events.withStreamShufflePartitions(spark, p.toString)(spark.conf.get(key).toInt)
+    try {
+      sized(root.resolve("flat"), 40)
+      sized(root.resolve("nested/k=a"), 20)
+      sized(root.resolve("nested/k=b"), 20)
+      val before = spark.conf.get(key)
+      // ceil(bytes / 16 MB), clamped to [1, cores]
+      assert(chosen(root.resolve("flat/part-0.parquet")) == 3)
+      assert(chosen(root.resolve("flat")) == 3)
+      assert(chosen(root.resolve("nested")) == 3)
+      assert(chosen(root.resolve("nested/k=a")) == 2)
+      assert(spark.conf.get(key) == before)
+    } finally Files.walk(root).sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))
+  }
+
   test("streaming tumbling agg equals the batch plan (same expressions)") {
     val batch = Events.tumbling(sf0001.events)
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
